@@ -1,23 +1,25 @@
 """Streaming queries as first-class catalog entries: each runs the REAL
 Structured Streaming path (readStream -> windowed agg / dedup -> memory
-sink, availableNow) over the closed events table, so the t2 gate
-hash-checks actual streaming execution against the batch-SQL oracle —
-not just the batch twin (FIXTURES.md: 'streaming queries are verified
-on closed inputs against the equivalent batch query').
+sink, availableNow) over a closed table (events or documents), so the
+t2 gate hash-checks actual streaming execution against the batch-SQL
+oracle — not just the batch twin (FIXTURES.md: 'streaming queries are
+verified on closed inputs against the equivalent batch query').
+
+Every query drains through :func:`streaming.windows.run_on_closed_input`,
+the same drain the stream==batch tests use; constant-state sketch drains
+pass ``partitions="2"`` (measured width table beside its default).
+State-operator metrics are read by a ``StreamingQueryListener`` on the
+session, not published by this module.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketch as _SK
-from ..sources.tables import normalize_event_time, parquet_schema
 from ..streaming import windows as SW
 from .catalog import query
 from .curation6 import SKEW_ORACLE as _SKEW_ORACLE
@@ -33,159 +35,6 @@ from .curation19 import LINEDEDUP_COUNTER_ORACLE as _LINEDEDUP_COUNTER_ORACLE
 from .curation20 import PPL_ORACLE as _PPL_ORACLE
 from .curation21 import BIGRAM_ORACLE as _BIGRAM_ORACLE
 from .curation22 import LLR_ORACLE as _LLR_ORACLE
-
-# State-store backend for the catalog drains. At 100 TB of events the
-# state store IS the scaling wall for stateful streaming (watermarked
-# windows, dedup, stream-stream joins, applyInPandasWithState): the
-# default HDFS-backed provider keeps every state row on the JVM heap,
-# so state is bounded by executor memory; RocksDB spills to local disk
-# with incremental checkpointing and is the provider a production
-# deployment runs. Default ON here; SPARK_GRAFT_STATE_STORE=hdfs
-# reverts to the heap provider.
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-# Observability (K8): stateOperators metrics (state rows / bytes /
-# provider custom metrics) of the most recent drain, keyed by catalog
-# drain id — the same reconciliation surface the delivery pipeline's
-# _progress log gives the sinks.
-LAST_DRAIN_PROGRESS: dict[str, object] = {}
-
-
-def _state_store_conf() -> str | None:
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower() == "hdfs":
-        return None
-    return _ROCKSDB_PROVIDER
-
-
-def _drain_width(explicit: str | None) -> str:
-    """Shuffle width for a closed-input drain. Each stateful stage
-    allocates one state-store instance PER shuffle partition, so the
-    right width tracks the drain's STATE SIZE, not the data volume —
-    round-12 fresh-process measurements at sf0.1 (min-of-3):
-
-      width          8       2
-      q129 hll     3.98    3.41   (constant state, Arrow-scan bound)
-      q134 hist    3.41    1.50   (constant state)
-      q136 bloom   3.61    2.28   (constant state)
-      q113 cms     2.17    1.88   (constant state)
-      q73 join     3.26    3.46   (real join state — wants width)
-      q91 pandas   2.41    3.26   (python-stateful — wants width)
-
-    so constant-state sketch drains pass explicit "2" and everything
-    else keeps the default 8 (itself measured in round 9: 6.9 ->
-    2.3 s for the stream-stream join at 32 -> 8). The env knob
-    overrides both for A/B experiments. On a real cluster the
-    checkpoint fixes state partitioning per query — size it to the
-    stream's key cardinality, not this local knob."""
-    env = os.environ.get("SPARK_GRAFT_DRAIN_PARTITIONS")
-    if env:
-        return env
-    return explicit if explicit is not None else "8"
-
-
-def _stream_table_closed(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    op,
-    output_mode: str,
-    normalize_ts: bool = False,
-    partitions: str | None = None,
-) -> DataFrame:
-    """THE closed-input drain: stream the canonical parquet table
-    through Structured Streaming (availableNow -> memory sink) and
-    return the fully-materialized result. One implementation serves
-    every streaming catalog query — the events/documents twins had
-    already started diverging (normalize/conf fixes landing in one but
-    not the other) when they were separate copies.
-
-    Self-sufficient under ANY session, like load_table: sets
-    nanosAsLong (events.ts has shipped as TIMESTAMP(NANOS)), pins the
-    session timezone to UTC (window-start strings must render in UTC
-    for oracle hash parity — a non-UTC external session would shift
-    them), and normalizes the event-time column across the parquet
-    encodings the driver has generated.
-
-    Stateful operators allocate one state-store instance PER shuffle
-    partition per stateful stage; on a closed local input that fixed
-    per-instance cost dominates (measured 6.9 s -> 2.3 s for the
-    stream-stream join at 32 -> 8 partitions, sf0.1). Scope a small
-    partition count to this drain and restore the session value — on
-    a real cluster the checkpoint fixes state partitioning per query,
-    sized to the stream's key cardinality, not to this local default.
-    """
-    tmp = tempfile.mkdtemp(prefix="stream_q_")
-    name = f"sq_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    provider = _state_store_conf()
-    # Reset observability UP FRONT: a drain that ends without a
-    # progress report must not leave the previous drain's state metrics
-    # attributed to this one.
-    LAST_DRAIN_PROGRESS.clear()
-    LAST_DRAIN_PROGRESS.update(
-        {
-            "query": name,
-            "table": table,
-            "provider": provider or "hdfs-default",
-            "stateOperators": [],
-        }
-    )
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", _drain_width(partitions))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        if provider is not None:
-            spark.conf.set(_PROVIDER_CONF, provider)
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        # Reader schema from the parquet footer driver-side: the
-        # spark.read.parquet(...)-schema probe this replaced launched a
-        # 1-task inference JOB per drain — pure fixed cost x 23
-        # streaming catalog queries (round-17 verdict Next #4; guide
-        # §6). parquet_schema maps footer types under THIS session's
-        # confs (nanosAsLong/NTZ set just above), equality pinned in
-        # tests/test_round18_schema.py.
-        schema = parquet_schema(spark, src)
-        # The streaming file source wants a directory or a glob; the
-        # canonical table is a single file, so glob it (zero-copy).
-        stream = spark.readStream.schema(schema).parquet(src + "*")
-        if normalize_ts:
-            stream = normalize_event_time(stream, "ts")
-        q = (
-            op(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # K8 observability: surface state rows/bytes (and the RocksDB
-        # custom metrics, which double as proof the provider was
-        # active) for the stateful stage(s) of this drain.
-        lp = q.lastProgress
-        if lp is not None:
-            LAST_DRAIN_PROGRESS["stateOperators"] = lp.get("stateOperators", [])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(name)
-
-
-def _stream_events_closed(spark: SparkSession, sf_dir: str, op, output_mode: str) -> DataFrame:
-    return _stream_table_closed(
-        spark, sf_dir, "events", op, output_mode, normalize_ts=True
-    )
-
 
 @query(
     "q50_streaming_tumbling",
@@ -204,7 +53,9 @@ def _stream_events_closed(spark: SparkSession, sf_dir: str, op, output_mode: str
     tags=("streaming", "window"),
 )
 def q50_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.tumbling_counts, "complete")
+    out = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), SW.tumbling_counts, "complete"
+    )
     return out.orderBy("window_start", "event_type")
 
 
@@ -228,7 +79,9 @@ def q50_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window"),
 )
 def q56_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.sliding_counts, "complete")
+    out = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), SW.sliding_counts, "complete"
+    )
     return out.orderBy("window_start")
 
 
@@ -268,7 +121,9 @@ def q56_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "session"),
 )
 def q57_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.session_counts, "complete")
+    out = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), SW.session_counts, "complete"
+    )
     return (
         out.groupBy("user_id")
         .agg(
@@ -293,9 +148,9 @@ def q57_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup"),
 )
 def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(
+    out = SW.run_on_closed_input(
         spark,
-        sf_dir,
+        os.path.join(sf_dir, "events.parquet"),
         lambda df: SW.streaming_dedup(df, ["user_id", "event_type"]).select(
             "user_id", "event_type"
         ),
@@ -327,23 +182,13 @@ def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def q73_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.interval_join_counts, "append")
+    out = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), SW.interval_join_counts, "append"
+    )
     return (
         out.groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
         .orderBy("user_id")
-    )
-
-
-def _stream_documents_closed(
-    spark: SparkSession,
-    sf_dir: str,
-    op,
-    output_mode: str,
-    partitions: str | None = None,
-) -> DataFrame:
-    return _stream_table_closed(
-        spark, sf_dir, "documents", op, output_mode, partitions=partitions
     )
 
 
@@ -390,7 +235,7 @@ def q83_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["source", "digest"])
         )
 
-    out = _stream_documents_closed(spark, sf_dir, op, "append")
+    out = SW.run_on_closed_input(spark, os.path.join(sf_dir, "documents.parquet"), op, "append")
     return (
         out.groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
@@ -425,7 +270,9 @@ def q91_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..streaming.stateful import running_user_totals
 
-    out = _stream_events_closed(spark, sf_dir, running_user_totals, "update")
+    out = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), running_user_totals, "update"
+    )
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         out.withColumn("rn", F.row_number().over(w))
@@ -490,7 +337,7 @@ def q108_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return streaming_rolling_zscore(base)
 
-    out = _stream_events_closed(spark, sf_dir, op, "append")
+    out = SW.run_on_closed_input(spark, os.path.join(sf_dir, "events.parquet"), op, "append")
     return (
         out.select("event_id", "user_id", "v_milli", F.round("z", 3).alias("z"))
         .orderBy("event_id")
@@ -557,7 +404,9 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return _sketch.countmin_counters(df, "text")
 
-    grid = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    grid = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
+    )
     top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), "text", 20)
     return _sketch.countmin_probe(grid, top)
 
@@ -609,7 +458,9 @@ def q121_streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     def op(df):
         return _sharding.shard_manifest(df, "doc_id", 8, seed=17, chars_col="n_chars")
 
-    return _stream_documents_closed(spark, sf_dir, op, "complete").orderBy("shard")
+    return SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete"
+    ).orderBy("shard")
 
 
 
@@ -645,7 +496,9 @@ def q129_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _SK.hll_registers(rows.withColumnRenamed("doc", "source"), "source", "h")
 
-    regs = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    regs = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
+    )
     return _hll_output(spark, sf_dir, regs)
 
 
@@ -676,7 +529,13 @@ def q134_streaming_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram-sized state."""
     from .curation10 import _hist_output, hist_documents
 
-    hist = _stream_documents_closed(spark, sf_dir, hist_documents, "complete", partitions="2")
+    hist = SW.run_on_closed_input(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        hist_documents,
+        "complete",
+        partitions="2",
+    )
     return _hist_output(spark, sf_dir, hist)
 
 
@@ -725,7 +584,9 @@ def q136_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             bloom_flag_probes(_bloom_probe(df), bench_h, bits)
         )
 
-    agg = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    agg = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
+    )
     return bloom_finalize(agg)
 
 
@@ -767,7 +628,9 @@ def q141_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return dsir_distribution(_dsir_bucket_rows(df))
 
-    dist = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    dist = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
+    )
     return _dsir_output(spark, sf_dir, dist)
 
 
@@ -805,8 +668,8 @@ def q144_streaming_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return pii_counters(_pii_augment(df))
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return pii_finalize(state)
 
@@ -848,7 +711,7 @@ def q145_streaming_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return _skew.key_counts(df, "user_id")
 
-    state = _stream_events_closed(spark, sf_dir, op, "complete")
+    state = SW.run_on_closed_input(spark, os.path.join(sf_dir, "events.parquet"), op, "complete")
     return _skew.skew_rollup(state, _Q118_BUCKETS).orderBy("bucket")
 
 
@@ -882,8 +745,12 @@ def q150_streaming_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger."""
     from .curation16 import attrition_counters, attrition_finalize
 
-    state = _stream_documents_closed(
-        spark, sf_dir, attrition_counters, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+        attrition_counters,
+        "complete",
+        partitions="2",
     )
     return attrition_finalize(state)
 
@@ -922,8 +789,8 @@ def q152_streaming_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return domain_counters(_domain_augment(df))
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return domain_finalize(state)
 
@@ -960,8 +827,8 @@ def q154_streaming_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return mojibake_counters(_mojibake_augment(df))
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return mojibake_finalize(state)
 
@@ -1013,8 +880,8 @@ def q156_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return line_counters(_line_augment(df))
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return line_finalize(state)
 
@@ -1078,8 +945,8 @@ def q158_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return ppl_counters(_ppl_augment(df), vocab, n_ref)
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return ppl_finalize(state, g)
 
@@ -1136,8 +1003,8 @@ def q160_streaming_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return bigram_counters(_ppl_augment(df), pairs, ctx, vocab, n_ref)
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return ppl_finalize(state, g2)
 
@@ -1191,7 +1058,7 @@ def q162_streaming_llr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def op(df):
         return llr_counters(_llr_augment(df), weights, w_oov)
 
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, "complete", partitions="2"
     )
     return llr_finalize(state, theta2)

@@ -89,7 +89,11 @@ def parquet_schema(spark: SparkSession, path: str):
       ``spark.sql.legacy.parquet.nanosAsLong`` (the events-table
       encoding the driver has shipped in past rounds) else an
       unmapped-type fallback;
-    - primitives/lists/structs mapped 1:1.
+    - INT96 (Spark's default timestamp encoding, which pyarrow also
+      reports as ``timestamp[ns]``) -> TimestampType at top level;
+      nested INT96 falls back;
+    - primitives/lists/structs mapped 1:1, every field nullable (Spark
+      reads REQUIRED parquet columns as nullable too).
 
     Any file outside the mapped set falls back to Spark's inference
     (correct, just one job slower).  Equality with inference is pinned
@@ -134,7 +138,7 @@ def parquet_schema(spark: SparkSession, path: str):
             elem = _map(t.value_type)
             if elem is None:
                 return None
-            return T.ArrayType(elem, containsNull=t.value_field.nullable)
+            return T.ArrayType(elem, containsNull=True)
         if pa.types.is_struct(t):
             fields = []
             for i in range(t.num_fields):
@@ -142,7 +146,7 @@ def parquet_schema(spark: SparkSession, path: str):
                 ft = _map(f.type)
                 if ft is None:
                     return None
-                fields.append(T.StructField(f.name, ft, f.nullable))
+                fields.append(T.StructField(f.name, ft, True))
             return T.StructType(fields)
         return None
 
@@ -157,13 +161,21 @@ def parquet_schema(spark: SparkSession, path: str):
             if not parts:
                 raise FileNotFoundError(f"no parquet parts under {path}")
             target = os.path.join(path, parts[0])
-        asch = pq.read_schema(target)
+        with pq.ParquetFile(target) as pf:
+            footer, asch = pf.schema, pf.schema_arrow
+        int96 = {
+            footer.column(i).path
+            for i in range(len(footer))
+            if footer.column(i).physical_type == "INT96"
+        }
+        if any("." in p for p in int96):
+            raise ValueError(f"nested INT96 columns {sorted(int96)}")
         fields = []
         for f in asch:
-            st = _map(f.type)
+            st = T.TimestampType() if f.name in int96 else _map(f.type)
             if st is None:
                 raise ValueError(f"unmapped arrow type {f.type} for {f.name}")
-            fields.append(T.StructField(f.name, st, f.nullable))
+            fields.append(T.StructField(f.name, st, True))
         return T.StructType(fields)
     except Exception:
         # Fallback: Spark's own inference (one extra job, never wrong).

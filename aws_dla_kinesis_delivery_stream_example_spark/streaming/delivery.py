@@ -282,7 +282,12 @@ class DeliveryPipeline:
         crash-replay, so a replay that crosses a rotation boundary still
         writes the SAME index as the original attempt (otherwise dynamic
         overwrite of (batch_id, new-index) would leave (batch_id,
-        old-index) rows behind — duplicate documents)."""
+        old-index) rows behind — duplicate documents).
+
+        The record is written to a temp file and renamed into place, so
+        a crash mid-write leaves either no record or a complete one; a
+        leftover ``.tmp`` file is never read and is overwritten by the
+        next attempt."""
         import time
 
         d = os.path.join(self.dest_dir, "_index_epoch")
@@ -292,8 +297,12 @@ class DeliveryPipeline:
             with open(f) as fh:
                 return float(fh.read().strip())
         now = time.time()
-        with open(f, "w") as fh:
+        tmp = f"{f}.tmp"
+        with open(tmp, "w") as fh:
             fh.write(repr(now))
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, f)
         return now
 
     def _write_documents(

@@ -6,14 +6,57 @@ generalization. Every function here takes a (possibly streaming)
 DataFrame with a ``ts`` timestamp column and returns the transformed
 (streaming) DataFrame — the SAME logical plan serves batch and stream,
 which is what the closed-input stream==batch tests assert.
+
+:func:`run_on_closed_input` is the one closed-input drain: every
+``streaming``-tagged catalog query and every stream==batch test runs
+its operator through it, and it leaves the session as it found it (no
+temp view, no active stream, shuffle width and state-store provider
+restored).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import normalize_event_time, parquet_schema
+
+# State-store backend for every closed-input drain. At 100 TB of events
+# the state store IS the scaling wall for stateful streaming (watermarked
+# windows, dedup, stream-stream joins, applyInPandasWithState): the
+# default HDFS-backed provider keeps every state row on the JVM heap, so
+# state is bounded by executor memory; RocksDB spills to local disk with
+# incremental checkpointing and is the provider a production deployment
+# runs.
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_WIDTH_CONF = "spark.sql.shuffle.partitions"
+
+# Shuffle width of a drain. Each stateful stage allocates one state-store
+# instance PER shuffle partition, so the right width tracks the drain's
+# STATE SIZE, not the data volume — fresh-process measurements at sf0.1
+# (min-of-3 seconds):
+#
+#   width          8       2
+#   q129 hll     3.98    3.41   (constant state, Arrow-scan bound)
+#   q134 hist    3.41    1.50   (constant state)
+#   q136 bloom   3.61    2.28   (constant state)
+#   q113 cms     2.17    1.88   (constant state)
+#   q73 join     3.26    3.46   (real join state — wants width)
+#   q91 pandas   2.41    3.26   (python-stateful — wants width)
+#
+# so constant-state sketch drains pass ``partitions="2"`` and everything
+# else keeps 8 (itself measured: 6.9 -> 2.3 s for the stream-stream join
+# at 32 -> 8). On a real cluster the checkpoint fixes state partitioning
+# per query — size it to the stream's key cardinality instead.
+DEFAULT_DRAIN_WIDTH = "8"
 
 
 def _event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -21,8 +64,6 @@ def _event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     TimestampType (LTZ); normalize long-nanos / TIMESTAMP_NTZ encodings
     the same way sources.tables.load_table does, so these operators are
     safe even on a DataFrame that bypassed load_table."""
-    from ..sources.tables import normalize_event_time
-
     return normalize_event_time(df, col)
 
 
@@ -112,23 +153,57 @@ def run_on_closed_input(
     parquet_path: str,
     op,
     output_mode: str = "append",
-    query_name: str = "closed_input_out",
+    partitions: str | None = None,
 ) -> DataFrame:
-    """Replay a *closed* parquet input through Structured Streaming and
-    return the final result as a batch DataFrame (memory sink +
-    availableNow). This is the FIXTURES.md rule: streaming answers are
-    verified against the batch answer on the same closed input."""
-    schema = spark.read.parquet(parquet_path).schema
-    stream = spark.readStream.schema(schema).parquet(parquet_path)
-    out = op(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
+    """Replay a *closed* parquet input (one file or a directory of
+    parts) through Structured Streaming — ``op`` applied to the stream,
+    memory sink, availableNow — and return the fully materialized
+    result. This is the FIXTURES.md rule: streaming answers are
+    verified against the batch answer on the same closed input.
+
+    Self-sufficient under ANY session, like ``load_table``: the reader
+    schema comes from the parquet footer (no inference job), nanosAsLong
+    is set (events.ts has shipped as TIMESTAMP(NANOS)), the session
+    timezone is pinned to UTC (window-start strings must render in UTC
+    for oracle hash parity), and ``ts`` is normalized across the parquet
+    encodings events.parquet has shipped with (a no-op without a ``ts``
+    column).
+
+    The shuffle width (``partitions``, default
+    :data:`DEFAULT_DRAIN_WIDTH`) and the RocksDB provider are scoped to
+    the drain and restored afterwards. The result is bound to the memory
+    sink's rows before its temp view is dropped, so the session gains
+    no view: the rows live as long as the returned DataFrame."""
+    tmp = tempfile.mkdtemp(prefix="closed_input_")
+    name = f"sq_{uuid.uuid4().hex[:10]}"
+    prev_width = spark.conf.get(_WIDTH_CONF)
+    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
+    try:
+        spark.conf.set(_WIDTH_CONF, partitions or DEFAULT_DRAIN_WIDTH)
+        spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        schema = parquet_schema(spark, parquet_path)
+        # The streaming file source wants a directory or a glob; glob a
+        # single file in place (zero-copy).
+        src = parquet_path if os.path.isdir(parquet_path) else parquet_path + "*"
+        stream = normalize_event_time(spark.readStream.schema(schema).parquet(src), "ts")
         q = (
-            out.writeStream.outputMode(output_mode)
+            op(stream)
+            .writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
+            .queryName(name)
+            .option("checkpointLocation", f"{tmp}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        spark.conf.set(_WIDTH_CONF, prev_width)
+        if prev_provider is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev_provider)
+        shutil.rmtree(tmp, ignore_errors=True)

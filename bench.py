@@ -137,14 +137,6 @@ def bench_delivery(spark, n_records: int = 100_000) -> float:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def _state_store_label() -> str:
-    from aws_dla_kinesis_delivery_stream_example_spark.plans.streaming_q import (
-        _state_store_conf,
-    )
-
-    return "hdfs" if _state_store_conf() is None else "rocksdb"
-
-
 def _cpu_row() -> list[int]:
     with open("/proc/stat") as f:
         for line in f:
@@ -208,12 +200,10 @@ def main() -> None:
         "delivery_rec_per_s": tps,
         "repeats": REPEATS,
         "agg": "min",
-        # A/B label for the q34/q40/q46 drift investigation:
-        # which state-store provider the streaming drains used
-        # (rocksdb loads a native lib into the shared JVM).
-        # Derived from the SAME resolver the drains use, so the
-        # label cannot disagree with the provider actually run.
-        "state_store": _state_store_label(),
+        # State-store provider of the streaming drains (a constant
+        # of streaming.windows.run_on_closed_input); kept so older
+        # artifacts that carried an hdfs arm stay comparable.
+        "state_store": "rocksdb",
         "sweep_wall_sec": wall,
         "n_queries_ok": len(ok),
         "query_errors": errs,

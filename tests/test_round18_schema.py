@@ -67,6 +67,19 @@ def test_nanos_timestamp_maps_to_long_under_legacy_conf(spark, tmp_path):
     assert dict((f.name, f.dataType.simpleString()) for f in built)["ts"] == "bigint"
 
 
+def test_spark_written_int96_timestamp_maps_to_timestamp(spark, tmp_path):
+    # Spark writes timestamps as INT96 by default, which the footer
+    # reports as timestamp[ns]; under nanosAsLong that must still map to
+    # TimestampType, as Spark's own inference does, not to bigint.
+    src = str(tmp_path / "int96")
+    spark.sql("SELECT 1L AS id, TIMESTAMP '2024-01-01 10:00:00' AS ts").write.parquet(src)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    built = parquet_schema(spark, src)
+    inferred = spark.read.parquet(src).schema
+    assert built == inferred
+    assert dict((f.name, f.dataType.simpleString()) for f in built)["ts"] == "timestamp"
+
+
 def test_unmapped_type_falls_back_to_inference(spark, tmp_path):
     import decimal
 

@@ -4,8 +4,12 @@ the batch answer."""
 
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
 from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows as SW
@@ -34,7 +38,7 @@ def test_tumbling_stream_equals_batch(spark, events_parquet):
     # complete mode: append would (correctly) hold back the final
     # windows still inside the watermark horizon on a closed input.
     streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.tumbling_counts, output_mode="complete", query_name="t_tumbling"
+        spark, events_parquet, SW.tumbling_counts, output_mode="complete"
     )
     batch = SW.tumbling_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
@@ -44,9 +48,7 @@ def test_tumbling_append_holds_back_open_windows(spark, events_parquet):
     """Append mode emits only watermark-closed windows: streamed results
     are a strict prefix of the batch answer, missing only the tail."""
     streamed = _as_sets(
-        SW.run_on_closed_input(
-            spark, events_parquet, SW.tumbling_counts, query_name="t_tumbling_append"
-        )
+        SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts)
     )
     batch = _as_sets(SW.tumbling_counts(_batch(spark, events_parquet)))
     assert streamed <= batch
@@ -57,7 +59,7 @@ def test_tumbling_append_holds_back_open_windows(spark, events_parquet):
 
 def test_sliding_stream_equals_batch(spark, events_parquet):
     streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.sliding_counts, output_mode="complete", query_name="t_sliding"
+        spark, events_parquet, SW.sliding_counts, output_mode="complete"
     )
     batch = SW.sliding_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
@@ -67,7 +69,7 @@ def test_session_window_stream_runs(spark, events_parquet):
     """session_window is streaming-only in this form; assert it produces
     sessions and that per-user totals reconcile with the event count."""
     streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.session_counts, output_mode="complete", query_name="t_session"
+        spark, events_parquet, SW.session_counts, output_mode="complete"
     )
     total = streamed.agg(F.sum("session_len")).collect()[0][0]
     n_events = _batch(spark, events_parquet).count()
@@ -81,7 +83,6 @@ def test_streaming_dedup_equals_batch(spark, events_parquet):
         lambda df: SW.streaming_dedup(df, ["user_id", "event_type"]).select(
             "user_id", "event_type"
         ),
-        query_name="t_dedup",
     )
     batch = _batch(spark, events_parquet).select("user_id", "event_type").distinct()
     assert _as_sets(streamed) == _as_sets(batch)
@@ -150,9 +151,7 @@ def test_interval_join_stream_equals_batch(spark, events_parquet):
     """q73's operator: inner stream-stream interval joins emit matches
     as found, so an availableNow drain over a closed input equals the
     batch range join (the oracle path)."""
-    streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.interval_join_counts, query_name="t_ijoin"
-    )
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.interval_join_counts)
     batch = SW.interval_join_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
 
@@ -188,44 +187,67 @@ def test_interval_join_boundaries(spark, tmp_path):
 
     batch = SW.interval_join_counts(spark.read.parquet(src))
     assert fmt(batch) == expected
-    streamed = SW.run_on_closed_input(
-        spark, src, SW.interval_join_counts, query_name="t_ijoin_bounds"
-    )
+    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_counts)
     assert fmt(streamed) == expected
 
 
-def test_drain_uses_rocksdb_state_store(spark):
-    """The catalog drains default to the RocksDB state-store provider
-    (the 100 TB backend) and surface state metrics for K8: provider
-    custom metrics prove RocksDB was actually active, not just
-    configured."""
-    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs, streaming_q
+class _ProgressListener(StreamingQueryListener):
+    """Keeps every progress event as a dict and signals when a query
+    terminates (listener events arrive asynchronously)."""
 
-    from .conftest import SF_SMOKE
+    def __init__(self):
+        self.progress = []
+        self.terminated = threading.Event()
 
-    # q91 keeps NoTimeout per-user state, so numRowsTotal stays non-zero
-    # on a closed input (dedup/window state is watermark-evicted by end
-    # of stream and would legitimately report 0)
-    df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.progress.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated.set()
+
+
+def test_drain_uses_rocksdb_state_store(spark, monkeypatch):
+    """The catalog drains run the RocksDB state-store provider (the
+    100 TB backend) and their state metrics reach the session's
+    progress listeners: provider custom metrics prove RocksDB was
+    actually active, not just configured."""
+    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
+
+    provider_conf = "spark.sql.streaming.stateStore.providerClass"
+    providers = []
+    drain = SW.run_on_closed_input
+
+    def spy(spark_, path, op, *args, **kwargs):
+        def observed_op(stream):
+            providers.append(spark_.conf.get(provider_conf, None))
+            return op(stream)
+
+        return drain(spark_, path, observed_op, *args, **kwargs)
+
+    monkeypatch.setattr(SW, "run_on_closed_input", spy)
+    listener = _ProgressListener()
+    spark.streams.addListener(listener)
+    try:
+        # q91 keeps NoTimeout per-user state, so numRowsTotal stays
+        # non-zero on a closed input (dedup/window state is
+        # watermark-evicted by end of stream and would legitimately
+        # report 0)
+        df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
+        assert listener.terminated.wait(timeout=60), "drain never reported its end"
+    finally:
+        spark.streams.removeListener(listener)
     assert df.count() > 0
-    prog = streaming_q.LAST_DRAIN_PROGRESS
-    assert prog["provider"].endswith("RocksDBStateStoreProvider")
-    ops = prog["stateOperators"]
+    assert providers and providers[0].endswith("RocksDBStateStoreProvider")
+    assert listener.progress, "drain must report progress"
+    ops = listener.progress[-1]["stateOperators"]
     assert ops, "stateful drain must report state operators"
     assert ops[0]["numRowsTotal"] > 0
     assert any("rocksdb" in k.lower() for k in ops[0].get("customMetrics", {}))
     # conf restored: the drain must not leak the provider into the session
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None) is None
-    )
-
-
-def test_drain_state_store_flag_reverts_to_hdfs(spark, monkeypatch):
-    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs, streaming_q
-
-    from .conftest import SF_SMOKE
-
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "hdfs")
-    df = all_specs()["q51_streaming_dedup"].spark(spark, SF_SMOKE)
-    assert df.count() > 0
-    assert streaming_q.LAST_DRAIN_PROGRESS["provider"] == "hdfs-default"
+    assert spark.conf.get(provider_conf, None) is None
